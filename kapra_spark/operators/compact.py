@@ -161,20 +161,11 @@ def compact_partitions(spark: SparkSession, path: str,
            .withColumn("_f", F.pmod(F.xxhash64(*data_cols),
                                     F.col("_n_target"))))
     total = sum(d["n_target"] for d in plan)
-    # scope the dynamic overwrite to THIS write: restore the session's
-    # prior setting so later mode('overwrite') partitioned writes keep
-    # their semantics
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (fan.repartition(total, *partition_cols, F.col("_f"))
-         .drop("partition_key", "_n_target", "_f")
-         .write.mode("overwrite").partitionBy(*partition_cols).parquet(path))
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+    # dynamic overwrite as a per-write option: the session conf stays
+    (fan.repartition(total, *partition_cols, F.col("_f"))
+     .drop("partition_key", "_n_target", "_f")
+     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(*partition_cols).parquet(path))
 
     if lineage_path is not None and stage is not None:
         rows = [(run_id, f"compact:{stage}", d["partition_key"],

@@ -58,14 +58,27 @@ def _const_str(value: str, n: int) -> pa.Array:
         pa.array([value])).cast(pa.string())
 
 
-def _list_to_matrix(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """ListArray -> (flat values, offsets); caller reshapes when the
-    batch is rectangular."""
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
+def _series_columns(rb: pa.RecordBatch):
+    """(doc_id, source, n_tok, flat values, offsets) of a tokens batch,
+    resolved by NAME (partitioned read-back reorders columns). Checks
+    the input contract ``len(tokens) == n_tok`` once per batch: a row
+    with ``n_tok > len`` would read its neighbour's values and one with
+    ``n_tok < len`` would silently lose its tail."""
+    names = rb.schema.names
+    c_doc = rb.column(names.index("doc_id"))
+    n_tok = rb.column(names.index("n_tok")).to_numpy()
+    col = rb.column(names.index("tokens"))
     offsets = col.offsets.to_numpy()
+    lens = np.diff(offsets)
+    bad = np.nonzero(lens != n_tok)[0]
+    if len(bad):
+        i = int(bad[0])
+        raise ValueError(
+            f"tokens row doc_id={c_doc[i].as_py()!r} has len(tokens)="
+            f"{lens[i]} but n_tok={n_tok[i]} ({len(bad)} such rows in "
+            f"this batch)")
     flat = col.values.to_numpy(zero_copy_only=False)
-    return flat, offsets
+    return c_doc, rb.column(names.index("source")), n_tok, flat, offsets
 
 
 def compress_tokens(tokens_df: DataFrame, tier: str = "1m") -> DataFrame:
@@ -77,13 +90,7 @@ def compress_tokens(tokens_df: DataFrame, tier: str = "1m") -> DataFrame:
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            # by-name resolution, same discipline as decompress_tokens:
-            # partitioned read-back reorders columns
-            names = rb.schema.names
-            c_doc = rb.column(names.index("doc_id"))
-            c_src = rb.column(names.index("source"))
-            n_tok = rb.column(names.index("n_tok")).to_numpy()
-            flat, offsets = _list_to_matrix(rb.column(names.index("tokens")))
+            c_doc, c_src, n_tok, flat, offsets = _series_columns(rb)
             out_cols: dict[str, list] = {k: [] for k in
                                          ("take", "bucket_day", "t0", "v0", "n", "payload")}
             for nt in np.unique(n_tok):
@@ -103,6 +110,8 @@ def compress_tokens(tokens_df: DataFrame, tier: str = "1m") -> DataFrame:
                     out_cols["v0"].append(v0a)
                     out_cols["n"].append(na.astype(np.int32))
                     out_cols["payload"].append(payloads)
+            if not out_cols["take"]:  # only empty series
+                continue
             take = pa.array(np.concatenate(out_cols["take"]), type=pa.int64())
             pay = (out_cols["payload"][0] if len(out_cols["payload"]) == 1
                    else pa.concat_arrays(out_cols["payload"]))
@@ -177,12 +186,9 @@ def compress_and_cascade(tokens_df: DataFrame,
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            names = rb.schema.names
-            c_doc = rb.column(names.index("doc_id"))
-            c_src = rb.column(names.index("source"))
-            n_tok = rb.column(names.index("n_tok")).to_numpy()
-            flat, offsets = _list_to_matrix(rb.column(names.index("tokens")))
-            for nt in np.unique(n_tok):
+            c_doc, c_src, n_tok, flat, offsets = _series_columns(rb)
+            # an empty series (n_tok = 0) emits no rows
+            for nt in np.unique(n_tok[n_tok > 0]):
                 idx = np.nonzero(n_tok == nt)[0]
                 vals = rows_matrix(flat, offsets, idx, int(nt))
                 # --- blocks (same layout as compress_tokens) ---

@@ -5,10 +5,24 @@ The reference loses everything on a kill (single process, no
 persistence until the final CSV). The engine writes each stage
 partition-by-partition with dynamic partition overwrite and records
 (run scope, stage, partition_key, row_count, checksum) in a lineage
-table. Resume = left anti-join of the input's partition keys against
-committed lineage: only missing partitions are recomputed, and
-re-writing a partition is idempotent (overwrite), so a kill between
-data write and lineage append cannot double-count.
+table.
+
+Commit protocol (:func:`write_stages`; :func:`write_with_lineage` is
+its one-stage case). Per call, over any number of stages:
+
+1. the caller reads the lineage table ONCE and collects every stage's
+   committed partition keys on the driver (:func:`committed_keys`) —
+   metadata-sized, and the data plans never read lineage lazily;
+2. each stage drops the rows of its committed partitions (an anti-join
+   against that literal key set) — the exact resume filter;
+3. ONE collect computes (row_count, checksum) of every pending
+   partition of every stage;
+4. one partitioned dynamic-overwrite write per stage;
+5. ONE lineage append commits all stages.
+
+A kill between the data writes and the commit leaves those partitions
+uncommitted: the next run recomputes them and overwrites them
+idempotently, so nothing is double-counted and nothing is lost.
 
 Checksum is an order-independent BIT_XOR of xxhash64 over every column,
 so it is partition-layout and task-retry independent.
@@ -16,13 +30,24 @@ so it is partition-layout and task-retry independent.
 
 from __future__ import annotations
 
-import time
+import functools
+from typing import NamedTuple
 
+import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-LINEAGE_COLS = ["run_id", "stage", "partition_key", "row_count",
-                "checksum", "committed_at"]
+LINEAGE_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType()),
+    T.StructField("stage", T.StringType()),
+    T.StructField("partition_key", T.StringType()),
+    T.StructField("row_count", T.LongType()),
+    T.StructField("checksum", T.LongType()),
+    T.StructField("committed_at", T.TimestampType()),
+])
+LINEAGE_COLS = LINEAGE_SCHEMA.fieldNames()
 
 
 def row_checksum(df: DataFrame) -> F.Column:
@@ -32,22 +57,108 @@ def row_checksum(df: DataFrame) -> F.Column:
     return F.xxhash64(*[F.col(c).cast("string") for c in sorted(df.columns)])
 
 
+def partition_key(partition_cols: list[str]) -> F.Column:
+    """The lineage ``partition_key``: partition values joined by '|'."""
+    return F.concat_ws("|", *[F.col(c).cast("string") for c in partition_cols])
+
+
 def partition_metrics(df: DataFrame, partition_cols: list[str]) -> DataFrame:
     """(partition_key, row_count, checksum) per partition."""
-    key = F.concat_ws("|", *[F.col(c).cast("string") for c in partition_cols])
-    return (df.groupBy(key.alias("partition_key"))
+    return (df.groupBy(partition_key(partition_cols).alias("partition_key"))
             .agg(F.count("*").alias("row_count"),
                  F.bit_xor(row_checksum(df)).alias("checksum")))
 
 
-def committed_partitions(spark: SparkSession, lineage_path: str,
-                         stage: str) -> DataFrame | None:
+def committed_keys(spark: SparkSession, lineage_path: str,
+                   stages: list[str]) -> dict[str, set[str]]:
+    """Committed partition keys of each of ``stages``, from ONE read of
+    the lineage table (empty sets when it does not exist yet)."""
+    out: dict[str, set[str]] = {s: set() for s in stages}
     try:
         lin = spark.read.parquet(lineage_path)
-    except Exception:
-        return None
-    return (lin.filter(F.col("stage") == stage)
-            .select("partition_key").distinct())
+    except AnalysisException:
+        return out
+    pdf = (lin.filter(F.col("stage").isin(list(stages)))
+           .select("stage", "partition_key").toPandas())
+    for stage, keys in pdf.groupby("stage")["partition_key"]:
+        out[stage] = set(keys)
+    return out
+
+
+class Stage(NamedTuple):
+    """One output of :func:`write_stages`. ``df`` is evaluated twice
+    (metrics, then write): set ``cache`` unless it is cheap to
+    recompute, e.g. a projection of a cached frame."""
+    name: str
+    df: DataFrame
+    path: str
+    partition_cols: list[str]
+    sort_within: list[str] | None = None
+    cache: bool = False
+
+
+def append_lineage(spark: SparkSession, lineage_path: str,
+                   batch: pd.DataFrame) -> None:
+    """Append a batch of lineage records (the commit), built as an
+    Arrow-backed local DataFrame with the explicit lineage schema."""
+    (spark.createDataFrame(batch[LINEAGE_COLS], schema=LINEAGE_SCHEMA)
+     .write.mode("append").parquet(lineage_path))
+
+
+def write_stages(stages: list[Stage], lineage_path: str, run_id: str,
+                 committed: dict[str, set[str]]) -> dict[str, dict]:
+    """Write every stage's pending partitions, then commit them all with
+    one lineage append (module docstring). ``committed`` maps a stage to
+    its committed keys (:func:`committed_keys`; empty = write all).
+    Returns {stage: {written_partitions, skipped_partitions}}, where
+    ``skipped_partitions`` counts the stage's committed partitions seen
+    (not their intersection with this input's keys: that would need a
+    distinct over the input, the full scan this path exists to avoid).
+
+    ``sort_within`` sorts rows WITHIN each task before writing (no
+    shuffle — ``sortWithinPartitions``), which makes parquet row-group
+    min/max statistics on those columns tight and disjoint: a point
+    lookup (``doc_id = X``) then skips whole row groups at scan time
+    instead of reading the partition. The scan-locality knob for the
+    blocks store — the parquet equivalent of an Iceberg sort order."""
+    spark = stages[0].df.sparkSession
+    works = []
+    for st in stages:
+        work = st.df
+        done = committed.get(st.name)
+        if done:
+            work = work.filter(~partition_key(st.partition_cols).isin(sorted(done)))
+        works.append(work.cache() if st.cache else work)
+    try:
+        # metrics BEFORE the data writes: an all-committed resume ends
+        # here without creating an empty (schema-less) data directory
+        metrics = functools.reduce(DataFrame.unionByName, [
+            partition_metrics(work, st.partition_cols)
+            .withColumn("stage", F.lit(st.name))
+            for st, work in zip(stages, works)]).toPandas()
+        for st, work in zip(stages, works):
+            if not (metrics["stage"] == st.name).any():
+                continue
+            if st.sort_within:
+                # partition cols lead so the file writer's required
+                # clustering is already satisfied and it inserts no
+                # second (unstable) sort
+                work = work.sortWithinPartitions(*st.partition_cols,
+                                                 *st.sort_within)
+            (work.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy(*st.partition_cols).parquet(st.path))
+        if len(metrics):
+            append_lineage(spark, lineage_path, metrics.assign(
+                run_id=run_id, committed_at=pd.Timestamp.now(tz="UTC")))
+    finally:
+        for st, work in zip(stages, works):
+            if st.cache:
+                work.unpersist()
+    written = metrics["stage"].value_counts()
+    return {st.name: {"written_partitions": int(written.get(st.name, 0)),
+                      "skipped_partitions": len(committed.get(st.name, ()))}
+            for st in stages}
 
 
 def write_with_lineage(
@@ -61,69 +172,13 @@ def write_with_lineage(
     sort_within: list[str] | None = None,
 ) -> dict:
     """Write ``df`` partitioned by ``partition_cols`` with exactly-once
-    semantics. Returns {written_partitions, skipped_partitions}.
-
-    ``sort_within`` sorts rows WITHIN each task before writing (no
-    shuffle — ``sortWithinPartitions``), which makes parquet row-group
-    min/max statistics on those columns tight and disjoint: a point
-    lookup (``doc_id = X``) then skips whole row groups at scan time
-    instead of reading the partition. The scan-locality knob for the
-    blocks store — the parquet equivalent of an Iceberg sort order."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    key = F.concat_ws("|", *[F.col(c).cast("string") for c in partition_cols])
-    df = df.withColumn("_pk", key)
-
-    skipped = 0
-    if resume:
-        done = committed_partitions(spark, lineage_path, stage)
-        if done is not None:
-            # the committed set is metadata-sized (one key per written
-            # partition), so collect it once and derive `skipped` from
-            # lineage alone: on a resume the committed keys are a
-            # subset of the input's keys by construction. This avoids
-            # the two full-input distinct-count shuffles the previous
-            # accounting cost (at 100 TB: two shuffles for a log line),
-            # and broadcasting the key set keeps the anti-join
-            # shuffle-free on the data side.
-            # NOTE: `skipped` counts committed partitions SEEN for the
-            # stage, not the intersection with this input's keys — an
-            # incremental resume covering a subset of history reports
-            # the full committed count. Exact intersection would need a
-            # distinct over the input (the full-input scan this path
-            # exists to avoid), so the metric is documented as
-            # "committed partitions seen" instead.
-            done_keys = done.collect()
-            skipped = len(done_keys)
-            if done_keys:
-                done_df = F.broadcast(
-                    spark.createDataFrame(done_keys)
-                    .withColumnRenamed("partition_key", "_pk"))
-                df = df.join(done_df, "_pk", "left_anti")
-
-    work = df.drop("_pk")
-    if sort_within:
-        # partition cols lead so the file writer's required clustering
-        # is already satisfied and it inserts no second (unstable) sort
-        work = work.sortWithinPartitions(*partition_cols, *sort_within)
-    work = work.cache()
-    # materialize metrics BEFORE the lineage append (the plan reads the
-    # lineage table through the resume anti-join, so a lazy
-    # re-evaluation after the append would see its own commit) and
-    # BEFORE the data write: an all-committed resume then ends here
-    # without creating an empty (schema-less) data directory
-    rows = (partition_metrics(work, partition_cols)
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("committed_at", F.current_timestamp())
-            .select(*LINEAGE_COLS)
-            .collect())
-    if rows:
-        work.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-        spark.createDataFrame(rows).write.mode("append").parquet(lineage_path)
-    work.unpersist()
-    return {"written_partitions": len(rows), "skipped_partitions": skipped}
+    semantics: the one-stage case of :func:`write_stages`. Returns
+    {written_partitions, skipped_partitions}."""
+    committed = (committed_keys(df.sparkSession, lineage_path, [stage])
+                 if resume else {})
+    return write_stages(
+        [Stage(stage, df, path, partition_cols, sort_within, cache=True)],
+        lineage_path, run_id, committed)[stage]
 
 
 def verify_against_lineage(spark: SparkSession, path: str,

@@ -40,8 +40,12 @@ def run_kp_anonymity(
         anon = anon.cache()
         anon.count()
 
-    vl = global_value_loss(anon).collect()[0]
-    pl = global_pattern_loss(tokens_df, anon).collect()[0]
+    try:
+        vl = global_value_loss(anon).collect()[0]
+        pl = global_pattern_loss(tokens_df, anon).collect()[0]
+    finally:
+        if not output_path:
+            anon.unpersist()
     eta = time.time() - t_start
 
     row = {

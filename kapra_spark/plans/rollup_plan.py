@@ -3,34 +3,86 @@ lineage-tracked writes — the engine's flagship plan (BASELINE.json
 north_rule).
 
     tokens (doc_id, tokens, n_tok, source)
-      ├─ 1m tier  -> Gorilla blocks  (compress.py, zero shuffle)
-      ├─ 1h tier  -> rows            (cascade_fast, zero shuffle)
-      └─ 1d tier  -> rows
-    each written partitioned by (source, day) through
-    lineage.write_with_lineage: a killed run resumes from committed
-    partitions, re-writes are idempotent, checksums certify equality.
+      └─ compress_and_cascade (one narrow pass, zero shuffle)
+           ├─ 1m tier -> Gorilla blocks  -> blocks_1m
+           ├─ 1h tier -> rows            -> tier_1h
+           └─ 1d tier -> rows            -> tier_1d
+    each table partitioned by (source, day), with per-partition lineage
+    (operators/lineage.py).
 
-Two execution modes:
+Default path: one resumable multi-stage write per call.
 
-- default: three independent linear scans of the columnar input (no
-  cache — at 100 TB you never want a 100 TB cache), one per output.
-- ``fused=True``: ONE scan + ONE Python pass via
-  ``compress_and_cascade`` writes everything as a single table
-  partitioned by (kind, source, day), where kind in
-  {blocks, 1h, 1d} — the partition dirs ARE the three tables
-  (read ``.../kind=1h/``). At 100 TB this trades two extra source
-  scans (~2x input bytes) for one staging write of ~15% of input
-  bytes — the cheaper side of that trade on any real storage.
+1. The lineage table is read ONCE: the committed (source, day) keys of
+   all three stages, collected on the driver.
+2. Pruning: every input series whose (source, day) partitions over its
+   EPOCH-aligned span — UTC days ``0..(n_tok-1)//1440`` — are committed
+   in every stage is dropped before any compute. This is exact: the
+   kernels are per-series and emit rows only inside that span, so such
+   a series has rows only in committed partitions, which the per-stage
+   anti-join would drop anyway. Rows whose ``len(tokens) != n_tok``
+   are never pruned, so the kernel's contract check sees them. Pruning
+   runs in a UTC session only: the tiers' ``day`` is the session-local
+   date of the bucket.
+3. ``compress_and_cascade`` runs ONCE over the remaining series,
+   cached; the three stage frames are projections of it.
+4. ``lineage.write_stages``: one collect of every stage's per-partition
+   (row_count, checksum), three partitioned writes and ONE lineage
+   commit. A kill between the writes and the commit recovers by
+   idempotent overwrite on the next run.
+
+``fused=True``: the same single pass writes everything as ONE table
+partitioned by (kind, source, day), where kind in {blocks, 1h, 1d} —
+the partition dirs ARE the three tables (read ``.../kind=1h/``).
 """
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.compress import compress_and_cascade, compress_tokens
-from ..operators.lineage import write_with_lineage
-from ..operators.rollup import DEFAULT_RETENTION, apply_retention, cascade_fast
+from ..operators.compress import compress_and_cascade
+from ..operators.lineage import (Stage, committed_keys, write_stages,
+                                 write_with_lineage)
+from ..operators.rollup import DEFAULT_RETENTION, EPOCH_SECONDS, apply_retention
+
+PARTITION_COLS = ["source", "day"]
+STAGES = ("blocks_1m", "tier_1h", "tier_1d")
+DAY_POINTS = 1440
+_EPOCH_DATE = dt.date(1970, 1, 1) + dt.timedelta(days=EPOCH_SECONDS // 86400)
+_UTC_ZONES = {"UTC", "Etc/UTC", "GMT", "Etc/GMT", "Z", "+00:00"}
+
+
+def _committed_days(committed: dict[str, set[str]]) -> dict[str, int]:
+    """source -> the number of leading span days (0, 1, ...) whose
+    partitions are committed in every stage; sources with none are left
+    out."""
+    days: dict[tuple[str, str], set[int]] = {}
+    for stage, keys in committed.items():
+        for key in keys:
+            source, _, day = key.rpartition("|")
+            days.setdefault((stage, source), set()).add(
+                (dt.date.fromisoformat(day) - _EPOCH_DATE).days)
+    out = {}
+    for source in {src for _, src in days}:
+        n = 0
+        while all(n in days.get((stage, source), ()) for stage in STAGES):
+            n += 1
+        if n:
+            out[source] = n
+    return out
+
+
+def _prune_committed(tokens: DataFrame, days: dict[str, int]) -> DataFrame:
+    """Drop the series whose whole span lies in committed days."""
+    if not days:
+        return tokens
+    limit = F.element_at(F.create_map(*[
+        F.lit(x) for src, n in days.items() for x in (src, DAY_POINTS * n)]),
+        F.col("source"))
+    prunable = (F.col("n_tok") <= limit) & (F.size("tokens") == F.col("n_tok"))
+    return tokens.filter(~F.coalesce(prunable, F.lit(False)))
 
 
 def run_rollup_pipeline(
@@ -45,8 +97,8 @@ def run_rollup_pipeline(
 ) -> dict:
     """Returns per-stage write stats. ``now_bucket_seconds`` pins the
     retention horizon (explicit for determinism/resume)."""
-    stats = {}
     lineage_path = f"{base_path}/_lineage"
+    policy = retention or DEFAULT_RETENTION
 
     if fused:
         union = compress_and_cascade(tokens, tiers=("1h", "1d"))
@@ -61,7 +113,6 @@ def run_rollup_pipeline(
             # the unfused path, expressed as one predicate over the
             # tagged union (blocks pass through, like the unfused path)
             from ..operators.rollup import TIERS
-            policy = retention or DEFAULT_RETENTION
             keep_pred = F.col("kind") == "blocks"
             for tier in ("1h", "1d"):
                 is_tier = F.col("kind") == tier
@@ -73,25 +124,29 @@ def run_rollup_pipeline(
                     keep_pred = keep_pred | (
                         is_tier & (F.col("bucket") >= F.lit(horizon)))
             union = union.filter(keep_pred)
-        stats["fused"] = write_with_lineage(
+        return {"fused": write_with_lineage(
             union, f"{base_path}/fused", ["kind", "source", "day"],
-            lineage_path, run_id, "fused", resume=resume)
-        return stats
+            lineage_path, run_id, "fused", resume=resume)}
 
-    blocks = (compress_tokens(tokens)
-              .withColumnRenamed("bucket_day", "day"))
-    stats["blocks_1m"] = write_with_lineage(
-        blocks, f"{base_path}/blocks_1m", ["source", "day"],
-        lineage_path, run_id, "blocks_1m", resume=resume)
+    committed = (committed_keys(spark, lineage_path, list(STAGES))
+                 if resume else {})
+    if spark.conf.get("spark.sql.session.timeZone") in _UTC_ZONES:
+        tokens = _prune_committed(tokens, _committed_days(committed))
 
-    tiers = cascade_fast(tokens, tiers=("1h", "1d"))
+    out = compress_and_cascade(tokens, tiers=("1h", "1d")).cache()
+    stages = [Stage("blocks_1m", out.filter(F.col("kind") == "block").select(
+        "doc_id", "source", F.lit("1m").alias("tier"), F.col("bucket_day").alias("day"),
+        "t0", "v0", "n", "payload"), f"{base_path}/blocks_1m", PARTITION_COLS)]
     for tier in ("1h", "1d"):
-        t = (tiers.filter(F.col("tier") == tier).drop("tier")
-             .withColumn("day", F.to_date(F.timestamp_seconds(F.col("bucket")))))
+        t = (out.filter(F.col("tier") == tier)
+             .select("source", "doc_id", "bucket", "cnt", "sum", "min", "max",
+                     "first", "last", "n_filled",
+                     F.to_date(F.timestamp_seconds("bucket")).alias("day")))
         if now_bucket_seconds is not None:
-            t = apply_retention(t, tier, now_bucket_seconds,
-                                retention or DEFAULT_RETENTION)
-        stats[f"tier_{tier}"] = write_with_lineage(
-            t, f"{base_path}/tier_{tier}", ["source", "day"],
-            lineage_path, run_id, f"tier_{tier}", resume=resume)
-    return stats
+            t = apply_retention(t, tier, now_bucket_seconds, policy)
+        stages.append(Stage(f"tier_{tier}", t, f"{base_path}/tier_{tier}",
+                            PARTITION_COLS))
+    try:
+        return write_stages(stages, lineage_path, run_id, committed)
+    finally:
+        out.unpersist()

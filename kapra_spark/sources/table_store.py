@@ -101,10 +101,9 @@ class TableStore:
         if mode == "append":
             df.write.mode("append").parquet(path)
             return
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode",
+        w = df.write.mode("overwrite").option(
+            "partitionOverwriteMode",
             "dynamic" if mode == "overwrite_partitions" else "static")
-        w = df.write.mode("overwrite")
         if partition_cols:
             w = w.partitionBy(*partition_cols)
         w.parquet(path)

@@ -220,3 +220,18 @@ def test_experiment_grid(spark, tokens, tmp_path):
     assert stored.count() == 2
     assert {"algorithm", "k", "p", "avg_pattern_loss",
             "avg_value_loss"} <= set(stored.columns)
+
+
+def test_run_kp_anonymity_releases_its_cache(spark, tokens):
+    """Without an output path the call caches its result; it must
+    unpersist it, or a repeat call is served from the stale cache."""
+    from kapra_spark.plans.anonymize_plan import run_kp_anonymity
+
+    tokens.count()  # the module fixture's own cache is not the call's
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    run_kp_anonymity(spark, "kapra", K, P, PAA, L, tokens)
+    assert persisted() == before

@@ -116,3 +116,21 @@ def test_fused_compress_and_cascade(spark):
     pd.testing.assert_frame_equal(blocks_f, blocks)
     pd.testing.assert_frame_equal(tiers_f, tiers)
     fused.unpersist()
+
+
+def test_compress_tokens_input_contract(spark):
+    """compress_tokens shares the contract check: an empty series emits
+    no block, and a row whose n_tok disagrees with its array raises
+    instead of being encoded from its neighbour's values."""
+    from kapra_spark.operators.compress import compress_tokens, decompress_tokens
+
+    ok = spark.createDataFrame([("e", [], 0, "sales"), ("x", [5, 6, 7], 3, "sales")],
+                               schema=datagen.TOKENS_SCHEMA).coalesce(1)
+    back = decompress_tokens(compress_tokens(ok)).collect()
+    assert [(r.doc_id, list(r.tokens)) for r in back] == [("x", [5, 6, 7])]
+
+    bad = spark.createDataFrame([("a", [1, 2, 3], 4, "sales"),
+                                 ("b", [100, 200, 300, 400], 4, "sales")],
+                                schema=datagen.TOKENS_SCHEMA).coalesce(1)
+    with pytest.raises(Exception, match=r"ValueError: tokens row doc_id='a'"):
+        compress_tokens(bad).collect()

@@ -118,3 +118,23 @@ def test_sort_within_orders_files_for_rowgroup_pruning(spark, tier1h,
     # lineage still verifies (checksum is order-free)
     v = verify_against_lineage(spark, path, ["source", "day"], lin, "s")
     assert v.filter(~F.col("ok")).count() == 0
+
+
+def test_write_with_lineage_leaves_session_conf(spark, tier1h, tmp_path):
+    """The dynamic partition overwrite is a per-write option: the
+    session's partitionOverwriteMode is untouched, and a re-write of one
+    partition still leaves the others in place."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    path, lin = str(tmp_path / "t"), str(tmp_path / "lin")
+    spark.conf.set(key, "STATIC")
+    try:
+        write_with_lineage(tier1h, path, ["source", "day"], lin,
+                           run_id="r1", stage="s", resume=False)
+        assert spark.conf.get(key) == "STATIC"
+        write_with_lineage(tier1h.filter(F.col("source") == "sales"), path,
+                           ["source", "day"], lin, run_id="r2", stage="s",
+                           resume=False)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.unset(key)
+    assert spark.read.parquet(path).count() == tier1h.count()

@@ -159,3 +159,182 @@ def test_fused_retention_matches_unfused(spark, tmp_path):
     s2 = run_rollup_pipeline(spark, tokens, b2, run_id="r2",
                              now_bucket_seconds=now, fused=True)
     assert s2["fused"]["written_partitions"] == 0
+
+
+# ---------------------------------------------------------------------------
+# one-commit resumable ingest: pruning, kill window, legacy lineage
+# ---------------------------------------------------------------------------
+
+STAGES = ("blocks_1m", "tier_1h", "tier_1d")
+
+
+def stage_metrics(spark, base):
+    """{stage: {partition_key: (row_count, checksum)}} of a stored store."""
+    from kapra_spark.operators.lineage import partition_metrics
+
+    return {s: {r["partition_key"]: (r["row_count"], r["checksum"])
+                for r in partition_metrics(spark.read.parquet(f"{base}/{s}"),
+                                           ["source", "day"]).collect()}
+            for s in STAGES}
+
+
+def assert_lineage_ok(spark, base):
+    from kapra_spark.operators.lineage import verify_against_lineage
+
+    for s in STAGES:
+        v = verify_against_lineage(spark, f"{base}/{s}", ["source", "day"],
+                                   f"{base}/_lineage", s)
+        assert v.filter(~F.col("ok") | F.col("ok").isNull()).count() == 0, s
+
+
+@pytest.fixture(scope="module")
+def one_shot(spark, tokens, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("one_shot") / "store")
+    run_rollup_pipeline(spark, tokens, base, run_id="one")
+    return base, stage_metrics(spark, base)
+
+
+def test_resume_recomputes_series_with_uncommitted_day(spark, tokens,
+                                                       one_shot, tmp_path):
+    """A two-day series whose day 0 is committed in every stage but
+    whose day 1 is not is not pruned: day 1 is written, day 0 skipped."""
+    base = str(tmp_path / "store")
+    day0 = tokens.select("doc_id", F.slice("tokens", 1, 1440).alias("tokens"),
+                         F.lit(1440).alias("n_tok"), "source")
+    s1 = run_rollup_pipeline(spark, day0, base, run_id="d0")
+    s2 = run_rollup_pipeline(spark, tokens, base, run_id="full")
+    for s in STAGES:
+        assert s2[s]["skipped_partitions"] == s1[s]["written_partitions"] > 0
+        assert s2[s]["written_partitions"] > 0
+    assert stage_metrics(spark, base) == one_shot[1]
+    assert_lineage_ok(spark, base)
+
+
+def test_kill_between_writes_and_commit(spark, tokens, one_shot, tmp_path,
+                                        monkeypatch):
+    """The data writes succeed, the single lineage commit fails: the
+    next run recomputes the uncommitted partitions and overwrites them
+    (no double counting), and lineage verifies."""
+    from kapra_spark.operators import lineage
+
+    base = str(tmp_path / "store")
+    run_rollup_pipeline(spark, tokens.filter(F.col("source") == "sales"),
+                        base, run_id="a")
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed before the lineage commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "append_lineage", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_rollup_pipeline(spark, tokens, base, run_id="b")
+    # the killed run's data is on disk, uncommitted
+    assert spark.read.parquet(f"{base}/tier_1h").count() == \
+        sum(n for n, _ in one_shot[1]["tier_1h"].values())
+
+    s = run_rollup_pipeline(spark, tokens, base, run_id="c")
+    assert all(s[st]["written_partitions"] > 0 for st in STAGES)
+    assert stage_metrics(spark, base) == one_shot[1]
+    assert_lineage_ok(spark, base)
+
+
+def test_committed_rerun_feeds_kernel_nothing(spark, tokens, one_shot,
+                                              tmp_path, monkeypatch):
+    """A rerun over a fully committed store prunes every series before
+    the kernel and writes no file."""
+    import os
+    import shutil
+
+    from kapra_spark.plans import rollup_plan
+
+    base = str(tmp_path / "store")
+    shutil.copytree(one_shot[0], base)
+
+    def files():
+        return {os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+                for d, _, fs in os.walk(base) for f in fs}
+
+    before = files()
+    fed = []
+    kernel = rollup_plan.compress_and_cascade
+
+    def spy(df, *args, **kwargs):
+        fed.append(df)
+        return kernel(df, *args, **kwargs)
+
+    monkeypatch.setattr(rollup_plan, "compress_and_cascade", spy)
+    stats = run_rollup_pipeline(spark, tokens, base, run_id="again")
+    assert [df.count() for df in fed] == [0]
+    assert all(stats[s]["written_partitions"] == 0 for s in STAGES)
+    assert files() == before
+
+
+def test_resume_from_per_stage_lineage(spark, tokens, one_shot, tmp_path):
+    """A store committed stage by stage (one data write and one
+    Row-built lineage append per stage, as before the one-commit
+    writer) resumes to the one-shot tables with identical checksums."""
+    from kapra_spark.operators.compress import compress_tokens
+    from kapra_spark.operators.lineage import LINEAGE_COLS, partition_metrics
+    from kapra_spark.operators.rollup import cascade_fast
+
+    base, lin = str(tmp_path / "store"), str(tmp_path / "store/_lineage")
+    part = tokens.filter(F.col("source") == "sales")
+    frames = {"blocks_1m": compress_tokens(part).withColumnRenamed("bucket_day", "day")}
+    tiers = cascade_fast(part, tiers=("1h", "1d"))
+    for tier in ("1h", "1d"):
+        frames[f"tier_{tier}"] = (
+            tiers.filter(F.col("tier") == tier).drop("tier")
+            .withColumn("day", F.to_date(F.timestamp_seconds("bucket"))))
+    for stage, df in frames.items():
+        rows = (partition_metrics(df, ["source", "day"])
+                .withColumn("run_id", F.lit("legacy"))
+                .withColumn("stage", F.lit(stage))
+                .withColumn("committed_at", F.current_timestamp())
+                .select(*LINEAGE_COLS).collect())
+        df.write.mode("overwrite").partitionBy("source", "day").parquet(f"{base}/{stage}")
+        spark.createDataFrame(rows).write.mode("append").parquet(lin)
+
+    s = run_rollup_pipeline(spark, tokens, base, run_id="new")
+    assert all(s[st]["skipped_partitions"] > 0 for st in STAGES)
+    assert stage_metrics(spark, base) == one_shot[1]
+    assert_lineage_ok(spark, base)
+
+
+# ---------------------------------------------------------------------------
+# input contract: len(tokens) == n_tok, checked where the kernel reads rows
+# ---------------------------------------------------------------------------
+
+def _tokens(spark, rows):
+    return spark.createDataFrame(rows, schema=datagen.TOKENS_SCHEMA).coalesce(1)
+
+
+def test_ntok_longer_than_tokens_raises(spark, tmp_path):
+    """n_tok > len(tokens) used to read the next row's values (row a got
+    a 1h sum of 106 from row b)."""
+    df = _tokens(spark, [("a", [1, 2, 3], 4, "sales"),
+                         ("b", [100, 200, 300, 400], 4, "sales")])
+    with pytest.raises(Exception, match=r"ValueError: tokens row doc_id='a'"):
+        run_rollup_pipeline(spark, df, str(tmp_path / "s"), run_id="r")
+
+
+def test_ntok_shorter_than_tokens_raises(spark, tmp_path):
+    """n_tok < len(tokens) used to drop the tail silently."""
+    df = _tokens(spark, [("b", [100, 200, 300, 400], 4, "sales"),
+                         ("c", [1, 2, 3, 4, 5], 3, "sales")])
+    with pytest.raises(Exception, match=r"ValueError: tokens row doc_id='c'"):
+        run_rollup_pipeline(spark, df, str(tmp_path / "s"), run_id="r")
+
+
+def test_empty_series_emits_no_rows(spark, tmp_path):
+    """n_tok = 0 used to crash the kernel; an empty series emits nothing."""
+    base = str(tmp_path / "s")
+    df = _tokens(spark, [("e", [], 0, "sales"), ("x", [5, 6, 7], 3, "sales")])
+    stats = run_rollup_pipeline(spark, df, base, run_id="r")
+    assert all(stats[s]["written_partitions"] == 1 for s in STAGES)
+    for s in STAGES:
+        got = [r["doc_id"] for r in spark.read.parquet(f"{base}/{s}").collect()]
+        assert got == ["x"], s
+    # a batch of empty series only
+    only_empty = _tokens(spark, [("e", [], 0, "sales")])
+    stats = run_rollup_pipeline(spark, only_empty, str(tmp_path / "e"), run_id="r")
+    assert all(stats[s]["written_partitions"] == 0 for s in STAGES)
