@@ -43,10 +43,11 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .lineage import LINEAGE_COLS, partition_metrics
+from .lineage import append_lineage, partition_metrics
 
 
 def list_partition_files(spark: SparkSession, path: str,
@@ -168,16 +169,12 @@ def compact_partitions(spark: SparkSession, path: str,
      .partitionBy(*partition_cols).parquet(path))
 
     if lineage_path is not None and stage is not None:
-        rows = [(run_id, f"compact:{stage}", d["partition_key"],
-                 actual[d["partition_key"]][0],
-                 actual[d["partition_key"]][1])
+        rows = [(d["partition_key"], *actual[d["partition_key"]])
                 for d in plan if d["partition_key"] in actual]
-        (spark.createDataFrame(
-            rows, "run_id string, stage string, partition_key string, "
-                  "row_count bigint, checksum bigint")
-         .withColumn("committed_at", F.current_timestamp())
-         .select(*LINEAGE_COLS)
-         .write.mode("append").parquet(lineage_path))
+        append_lineage(spark, lineage_path, pd.DataFrame(
+            rows, columns=["partition_key", "row_count", "checksum"]).assign(
+            run_id=run_id, stage=f"compact:{stage}",
+            committed_at=pd.Timestamp.now(tz="UTC")))
 
     return {"partitions_compacted": len(plan),
             "files_before": sum(d["n_files"] for d in plan),

@@ -485,17 +485,24 @@ def cascade_fast(tokens_df: DataFrame,
 # retention (downsample-and-expire)
 # ---------------------------------------------------------------------------
 
+def retention_horizon(tier: str, now_bucket_seconds: int,
+                      policy: dict[str, int | None] | None = None) -> int | None:
+    """The oldest bucket (epoch seconds) the tier keeps; None = all."""
+    policy = policy if policy is not None else DEFAULT_RETENTION
+    keep = policy.get(tier)
+    if keep is None:
+        return None
+    return now_bucket_seconds - keep * TIERS[tier] * 60
+
+
 def apply_retention(tier_df: DataFrame, tier: str, now_bucket_seconds: int,
                     policy: dict[str, int | None] | None = None) -> DataFrame:
     """Drop buckets older than the tier's retention horizon. ``now``
     is an explicit bucket timestamp (epoch seconds) so runs are
     deterministic and resumable."""
-    policy = policy if policy is not None else DEFAULT_RETENTION
-    keep = policy.get(tier)
-    if keep is None:
+    horizon = retention_horizon(tier, now_bucket_seconds, policy)
+    if horizon is None:
         return tier_df
-    mins = TIERS[tier]
-    horizon = now_bucket_seconds - keep * mins * 60
     bucket = tier_df.schema["bucket"].dataType
     if isinstance(bucket, T.LongType):
         return tier_df.filter(F.col("bucket") >= horizon)
