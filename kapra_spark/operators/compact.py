@@ -47,7 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .lineage import append_lineage, partition_metrics
+from .lineage import append_lineage, partition_key, partition_metrics
 
 
 def list_partition_files(spark: SparkSession, path: str,
@@ -152,12 +152,10 @@ def compact_partitions(spark: SparkSession, path: str,
                     f"lineage={expect[k]}) — store is inconsistent")
 
     # per-partition target file count via a broadcast metadata join
-    key = F.concat_ws("|", *[F.col(c).cast("string")
-                             for c in partition_cols])
     targets = F.broadcast(spark.createDataFrame(
         [(d["partition_key"], d["n_target"]) for d in plan],
         "partition_key string, _n_target int"))
-    fan = (df.withColumn("partition_key", key)
+    fan = (df.withColumn("partition_key", partition_key(partition_cols))
            .join(targets, "partition_key")
            .withColumn("_f", F.pmod(F.xxhash64(*data_cols),
                                     F.col("_n_target"))))

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions import gorilla
-from .rollup import EPOCH_SECONDS, rows_matrix
+from .rollup import DAY_POINTS, EPOCH_SECONDS, rows_matrix
 
 BLOCKS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -96,9 +96,8 @@ def compress_tokens(tokens_df: DataFrame, tier: str = "1m") -> DataFrame:
             for nt in np.unique(n_tok):
                 idx = np.nonzero(n_tok == nt)[0]
                 vals = rows_matrix(flat, offsets, idx, int(nt))
-                day_pts = 1440
-                for s in range(0, int(nt), day_pts):
-                    e = min(s + day_pts, int(nt))
+                for s in range(0, int(nt), DAY_POINTS):
+                    e = min(s + DAY_POINTS, int(nt))
                     ts = (EPOCH_SECONDS + (np.arange(s, e, dtype=np.int64) * 60))
                     ts2d = np.broadcast_to(ts, (len(idx), e - s))
                     t0a, v0a, na, payloads = gorilla.encode_batch_arrow(
@@ -192,9 +191,8 @@ def compress_and_cascade(tokens_df: DataFrame,
                 idx = np.nonzero(n_tok == nt)[0]
                 vals = rows_matrix(flat, offsets, idx, int(nt))
                 # --- blocks (same layout as compress_tokens) ---
-                day_pts = 1440
-                for s in range(0, int(nt), day_pts):
-                    e = min(s + day_pts, int(nt))
+                for s in range(0, int(nt), DAY_POINTS):
+                    e = min(s + DAY_POINTS, int(nt))
                     ts = EPOCH_SECONDS + np.arange(s, e, dtype=np.int64) * 60
                     ts2d = np.broadcast_to(ts, (len(idx), e - s))
                     t0a, v0a, na, payloads = gorilla.encode_batch_arrow(

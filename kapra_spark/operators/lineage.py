@@ -13,8 +13,9 @@ its one-stage case). Per call, over any number of stages:
 1. the caller reads the lineage table ONCE and collects every stage's
    committed partition keys on the driver (:func:`committed_keys`) —
    metadata-sized, and the data plans never read lineage lazily;
-2. each stage drops the rows of its committed partitions (an anti-join
-   against that literal key set) — the exact resume filter;
+2. each stage drops the rows of its committed partitions (a broadcast
+   left-anti join against that key set, so the plan stays small however
+   many keys are committed) — the exact resume filter;
 3. ONE collect computes (row_count, checksum) of every pending
    partition of every stage;
 4. one partitioned dynamic-overwrite write per stage;
@@ -60,6 +61,13 @@ def row_checksum(df: DataFrame) -> F.Column:
 def partition_key(partition_cols: list[str]) -> F.Column:
     """The lineage ``partition_key``: partition values joined by '|'."""
     return F.concat_ws("|", *[F.col(c).cast("string") for c in partition_cols])
+
+
+def partition_values(key: str, n_cols: int) -> tuple[str, ...]:
+    """Inverse of :func:`partition_key`: the ``n_cols`` partition values
+    of a lineage key (split from the right, so a '|' inside the first
+    value survives)."""
+    return tuple(key.rsplit("|", n_cols - 1))
 
 
 def partition_metrics(df: DataFrame, partition_cols: list[str]) -> DataFrame:
@@ -127,7 +135,10 @@ def write_stages(stages: list[Stage], lineage_path: str, run_id: str,
         work = st.df
         done = committed.get(st.name)
         if done:
-            work = work.filter(~partition_key(st.partition_cols).isin(sorted(done)))
+            keys = F.broadcast(spark.createDataFrame(
+                pd.DataFrame({"_pk": sorted(done)}), "_pk string"))
+            work = work.join(keys, partition_key(st.partition_cols)
+                             == F.col("_pk"), "left_anti")
         works.append(work.cache() if st.cache else work)
     try:
         # metrics BEFORE the data writes: an all-committed resume ends

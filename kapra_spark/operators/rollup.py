@@ -39,6 +39,10 @@ from pyspark.sql import types as T
 EPOCH = "2024-01-01 00:00:00"
 EPOCH_SECONDS = 1704067200  # 2024-01-01T00:00:00Z
 
+#: 1-minute points per UTC day: the kernels split a series into days of
+#: this many points from EPOCH, so point i falls on day i // DAY_POINTS
+DAY_POINTS = 1440
+
 #: minutes per bucket for each retention tier
 TIERS = {"1m": 1, "1h": 60, "1d": 1440}
 

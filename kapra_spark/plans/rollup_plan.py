@@ -15,16 +15,14 @@ Default path: one resumable multi-stage write per call.
 1. The lineage table is read ONCE: the committed (source, day) keys of
    all three stages, collected on the driver.
 2. Pruning: every input series whose (source, day) partitions over its
-   EPOCH-aligned span — UTC days ``0..(n_tok-1)//1440`` — are committed
-   in every stage is dropped before any compute. This is exact: the
-   kernels are per-series and emit rows only inside that span, so such
-   a series has rows only in committed partitions, which the per-stage
-   anti-join would drop anyway. A tier partition whose day lies wholly
-   before the tier's retention horizon counts as committed: retention
-   leaves it empty, so it is never written and never commits. Rows
-   whose ``len(tokens) != n_tok`` are never pruned, so the kernel's
-   contract check sees them. Pruning runs in a UTC session only: the
-   tiers' ``day`` is the session-local date of the bucket.
+   EPOCH-aligned span — UTC days ``0..(n_tok-1)//DAY_POINTS`` — are
+   committed in every stage is dropped before any compute. This is
+   exact: the kernels are per-series and emit rows only inside that
+   span, so such a series has rows only in committed partitions, which
+   the per-stage anti-join would drop anyway. Rows whose
+   ``len(tokens) != n_tok`` are never pruned, so the kernel's contract
+   check sees them. Pruning runs in a UTC session only: the tiers'
+   ``day`` is the session-local date of the bucket.
 3. ``compress_and_cascade`` runs ONCE over the remaining series,
    cached; the three stage frames are projections of it.
 4. ``lineage.write_stages``: one collect of every stage's per-partition
@@ -45,48 +43,31 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.compress import compress_and_cascade
-from ..operators.lineage import (Stage, committed_keys, write_stages,
-                                 write_with_lineage)
-from ..operators.rollup import (DEFAULT_RETENTION, EPOCH_SECONDS,
+from ..operators.lineage import (Stage, committed_keys, partition_values,
+                                 write_stages, write_with_lineage)
+from ..operators.rollup import (DAY_POINTS, DEFAULT_RETENTION, EPOCH_SECONDS,
                                 apply_retention, retention_horizon)
 
 PARTITION_COLS = ["source", "day"]
 STAGES = ("blocks_1m", "tier_1h", "tier_1d")
-DAY_POINTS = 1440
 _EPOCH_DATE = dt.date(1970, 1, 1) + dt.timedelta(days=EPOCH_SECONDS // 86400)
 _UTC_ZONES = {"UTC", "Etc/UTC", "GMT", "Etc/GMT", "Z", "+00:00"}
 
 
-def _expired_days(now_bucket_seconds: int | None,
-                  policy: dict) -> dict[str, int]:
-    """tier stage -> the number of leading span days whose buckets all
-    lie before the tier's retention horizon."""
-    if now_bucket_seconds is None:
-        return {}
-    out = {}
-    for tier in ("1h", "1d"):
-        horizon = retention_horizon(tier, now_bucket_seconds, policy)
-        if horizon is not None:
-            out[f"tier_{tier}"] = max(0, (horizon - EPOCH_SECONDS) // 86400)
-    return out
-
-
-def _committed_days(committed: dict[str, set[str]],
-                    expired: dict[str, int]) -> dict[str, int]:
+def _committed_days(committed: dict[str, set[str]]) -> dict[str, int]:
     """source -> the number of leading span days (0, 1, ...) whose
-    partitions are committed, or expired, in every stage; sources with
-    none are left out."""
+    partitions are committed in every stage; sources with none are left
+    out."""
     days: dict[tuple[str, str], set[int]] = {}
     for stage, keys in committed.items():
         for key in keys:
-            source, _, day = key.rpartition("|")
+            source, day = partition_values(key, len(PARTITION_COLS))
             days.setdefault((stage, source), set()).add(
                 (dt.date.fromisoformat(day) - _EPOCH_DATE).days)
     out = {}
     for source in {src for _, src in days}:
         n = 0
-        while all(n < expired.get(stage, 0) or n in days.get((stage, source), ())
-                  for stage in STAGES):
+        while all(n in days.get((stage, source), ()) for stage in STAGES):
             n += 1
         if n:
             out[source] = n
@@ -148,8 +129,7 @@ def run_rollup_pipeline(
     committed = (committed_keys(spark, lineage_path, list(STAGES))
                  if resume else {})
     if spark.conf.get("spark.sql.session.timeZone") in _UTC_ZONES:
-        tokens = _prune_committed(tokens, _committed_days(
-            committed, _expired_days(now_bucket_seconds, policy)))
+        tokens = _prune_committed(tokens, _committed_days(committed))
 
     out = compress_and_cascade(tokens, tiers=("1h", "1d")).cache()
     stages = [Stage("blocks_1m", out.filter(F.col("kind") == "block").select(

@@ -238,10 +238,23 @@ def test_kill_between_writes_and_commit(spark, tokens, one_shot, tmp_path,
     assert_lineage_ok(spark, base)
 
 
-def kernel_inputs(monkeypatch) -> list:
-    """Spy on the pipeline's kernel: the frames it is fed, in order."""
+def test_committed_rerun_feeds_kernel_nothing(spark, tokens, one_shot,
+                                              tmp_path, monkeypatch):
+    """A rerun over a fully committed store prunes every series before
+    the kernel and writes no file."""
+    import os
+    import shutil
+
     from kapra_spark.plans import rollup_plan
 
+    base = str(tmp_path / "store")
+    shutil.copytree(one_shot[0], base)
+
+    def files():
+        return {os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+                for d, _, fs in os.walk(base) for f in fs}
+
+    before = files()
     fed = []
     kernel = rollup_plan.compress_and_cascade
 
@@ -250,51 +263,10 @@ def kernel_inputs(monkeypatch) -> list:
         return kernel(df, *args, **kwargs)
 
     monkeypatch.setattr(rollup_plan, "compress_and_cascade", spy)
-    return fed
-
-
-def files(base):
-    import os
-
-    return {os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
-            for d, _, fs in os.walk(base) for f in fs}
-
-
-def test_committed_rerun_feeds_kernel_nothing(spark, tokens, one_shot,
-                                              tmp_path, monkeypatch):
-    """A rerun over a fully committed store prunes every series before
-    the kernel and writes no file."""
-    import shutil
-
-    base = str(tmp_path / "store")
-    shutil.copytree(one_shot[0], base)
-    before = files(base)
-    fed = kernel_inputs(monkeypatch)
     stats = run_rollup_pipeline(spark, tokens, base, run_id="again")
     assert [df.count() for df in fed] == [0]
     assert all(stats[s]["written_partitions"] == 0 for s in STAGES)
-    assert files(base) == before
-
-
-def test_expired_days_count_as_committed(spark, tokens, tmp_path, monkeypatch):
-    """A tier day wholly past its retention horizon is never written,
-    so it never commits; pruning still drops the series on a rerun."""
-    from kapra_spark.operators.rollup import EPOCH_SECONDS
-
-    base = str(tmp_path / "store")
-    # 1h keeps 24 buckets before day 2: day 0 of the 1h tier expires
-    kw = dict(now_bucket_seconds=EPOCH_SECONDS + 2 * 86400,
-              retention={"1m": None, "1h": 24, "1d": None})
-    s1 = run_rollup_pipeline(spark, tokens, base, run_id="r1", **kw)
-    days = {r["day"].isoformat() for r in
-            spark.read.parquet(f"{base}/tier_1h").select("day").distinct().collect()}
-    assert days == {"2024-01-02"} and s1["tier_1h"]["written_partitions"] > 0
-    before = files(base)
-    fed = kernel_inputs(monkeypatch)
-    s2 = run_rollup_pipeline(spark, tokens, base, run_id="r2", **kw)
-    assert [df.count() for df in fed] == [0]
-    assert all(s2[s]["written_partitions"] == 0 for s in STAGES)
-    assert files(base) == before
+    assert files() == before
 
 
 def test_resume_from_per_stage_lineage(spark, tokens, one_shot, tmp_path):
