@@ -163,9 +163,10 @@ def write_stages(stages: list[Stage], lineage_path: str, run_id: str,
             append_lineage(spark, lineage_path, metrics.assign(
                 run_id=run_id, committed_at=pd.Timestamp.now(tz="UTC")))
     finally:
+        # blocking: no block removal outlives the call
         for st, work in zip(stages, works):
             if st.cache:
-                work.unpersist()
+                work.unpersist(blocking=True)
     written = metrics["stage"].value_counts()
     return {st.name: {"written_partitions": int(written.get(st.name, 0)),
                       "skipped_partitions": len(committed.get(st.name, ()))}

@@ -45,7 +45,7 @@ def run_kp_anonymity(
         pl = global_pattern_loss(tokens_df, anon).collect()[0]
     finally:
         if not output_path:
-            anon.unpersist()
+            anon.unpersist(blocking=True)
     eta = time.time() - t_start
 
     row = {

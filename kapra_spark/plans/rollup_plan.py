@@ -24,7 +24,9 @@ Default path: one resumable multi-stage write per call.
    check sees them. Pruning runs in a UTC session only: the tiers'
    ``day`` is the session-local date of the bucket.
 3. ``compress_and_cascade`` runs ONCE over the remaining series,
-   cached; the three stage frames are projections of it.
+   cached; the three stage frames are projections of it. The cache is
+   released before the call returns (a blocking unpersist), so no
+   block removal overlaps the next call.
 4. ``lineage.write_stages``: one collect of every stage's per-partition
    (row_count, checksum), three partitioned writes and ONE lineage
    commit. A kill between the writes and the commit recovers by
@@ -147,4 +149,4 @@ def run_rollup_pipeline(
     try:
         return write_stages(stages, lineage_path, run_id, committed)
     finally:
-        out.unpersist()
+        out.unpersist(blocking=True)
