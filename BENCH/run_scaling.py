@@ -27,7 +27,7 @@ memory-bound kernels, which no Spark plan can exceed on one box:
    same shuffle partition count) so parallelism is the only variable.
 3. Next to the Spark numbers we report what this box can scale AT ALL
    (plain multiprocessing, no Spark): a pure-ALU loop AND the
-   engine's own Arrow-batch kernels (gorilla.encode_batch, the tier
+   engine's own Arrow-batch kernels (gorilla.encode_batch_arrow, the tier
    reducer). The kernel rows are the per-box ceiling for the matching
    Spark path; hardware-normalized efficiency = Spark eff / kernel
    ceiling eff is the number that transfers to a real cluster, where
@@ -88,7 +88,7 @@ def box_speed_index() -> float:
         1704067200 + np.arange(t, dtype=np.int64) * 60, (rows, t))
     n, t_end = 0, time.time() + 1.0
     while time.time() < t_end:
-        gorilla.encode_batch(ts, vals)
+        gorilla.encode_batch_arrow(ts, vals)
         n += vals.size
     return round(n / (time.time() - t_end + 1.0) / 1e6, 2)
 
@@ -210,7 +210,7 @@ def _burn_encode(q):
     ts, vals = _mk_tokens_block()
     n, t_end = 0, time.time() + 4
     while time.time() < t_end:
-        gorilla.encode_batch(ts, vals)
+        gorilla.encode_batch_arrow(ts, vals)
         n += vals.size
     q.put(n)
 

@@ -31,25 +31,28 @@ streams. Decoding is therefore also stateless per point.)
 
 For the engine's fixed 1-minute grids every dod is 0, so timestamps
 cost 1 bit/point and values dominate.
+
+Decoding: :func:`decode_batch_arrow` is the production decoder. It
+reads a whole Arrow payload column (ragged point counts) in two
+vectorized phases: a *walk* that only finds where each point starts
+(on a fixed grid a point's bit length is one table lookup on its
+14-bit prefix), then an *extract* that reads every dod and xor field
+at once and rebuilds the series with ``cumsum`` / xor scans.
+:func:`decode_block` is its serial certificate: a bit-by-bit reader
+that shares no code with it, used by the tests to check it.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
-_DOD_BRANCHES = (  # (control bits as (bits, nbits), payload bits, lo, hi)
-    ((0b0, 1), 0, 0, 0),
-    ((0b10, 2), 7, -63, 64),
-    ((0b110, 3), 9, -255, 256),
-    ((0b1110, 4), 12, -2047, 2048),
-    ((0b1111, 4), 64, None, None),
-)
-
-
-def _bits_of(vals: np.ndarray, nbits: int) -> np.ndarray:
-    """(n,) uint64 -> (n, nbits) of 0/1, MSB first."""
-    shifts = np.arange(nbits - 1, -1, -1, dtype=np.uint64)
-    return ((vals[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.uint8)
+# the five dod branches: control bits, their count, payload bits and
+# the payload's offset (branch 4 stores the raw 64-bit dod)
+_CTRL_VAL = np.array([0b0, 0b10, 0b110, 0b1110, 0b1111], dtype=np.uint64)
+_CTRL_LEN = np.array([1, 2, 3, 4, 4], dtype=np.int64)
+_PAY_LEN = np.array([0, 7, 9, 12, 64], dtype=np.int64)
+_LO = np.array([0, -63, -255, -2047, 0], dtype=np.int64)
 
 
 def _leading_zeros64(x: np.ndarray) -> np.ndarray:
@@ -79,42 +82,19 @@ def _trailing_zeros64(x: np.ndarray) -> np.ndarray:
 
 def encode_block(ts: np.ndarray, values: np.ndarray) -> tuple[int, int, int, bytes]:
     """Encode one series. Returns (t0, v0, n, payload). Thin wrapper
-    over the batch encoder (used by tests; production uses
-    :func:`encode_batch`)."""
-    t0, v0, n, payloads = encode_batch(ts[None, :], values[None, :])
-    return int(t0[0]), int(v0[0]), int(n[0]), payloads[0]
-
-
-def encode_batch(ts2d: np.ndarray, vals2d: np.ndarray, chunk_rows: int = 1024
-                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, list[bytes]]:
-    """Encode (rows, T) timestamp + value matrices into per-row blocks,
-    returning per-row ``bytes`` payloads. Thin slicing wrapper over
-    :func:`_encode_chunk`; the Arrow hot path
-    (:func:`encode_batch_arrow`) skips the per-row bytes objects."""
-    ts2d = np.asarray(ts2d, dtype=np.int64)
-    vals2d = np.asarray(vals2d, dtype=np.int64)
-    rows = vals2d.shape[0]
-    t0s, v0s, ns, payloads = [], [], [], []
-    for s in range(0, max(rows, 1), chunk_rows):
-        a, b, c, buf, off = _encode_chunk(ts2d[s:s + chunk_rows],
-                                          vals2d[s:s + chunk_rows])
-        t0s.append(a)
-        v0s.append(b)
-        ns.append(c)
-        payloads.extend(buf[off[i]:off[i + 1]] for i in range(len(c)))
-    return (np.concatenate(t0s), np.concatenate(v0s),
-            np.concatenate(ns), payloads)
+    over :func:`encode_batch_arrow` (used by tests)."""
+    t0, v0, n, payload = encode_batch_arrow(ts[None, :], values[None, :])
+    return int(t0[0]), int(v0[0]), int(n[0]), payload[0].as_py()
 
 
 def encode_batch_arrow(ts2d: np.ndarray, vals2d: np.ndarray,
                        chunk_rows: int = 1024):
-    """Like :func:`encode_batch` but returns the payload column as ONE
-    Arrow BinaryArray built zero-copy from the packed buffer + offsets
+    """Encode (rows, T) timestamp + value matrices into per-row blocks:
+    ``(t0, v0, n, payload)`` with the payload column as ONE Arrow
+    BinaryArray built zero-copy from the packed buffer + offsets
     (guide §4.2: a binary column is a data buffer plus offsets, so no
     per-row Python bytes objects and no ``pa.array(list)`` re-serialize
     — the dominant constant cost at millions of blocks per task)."""
-    import pyarrow as pa
-
     ts2d = np.asarray(ts2d, dtype=np.int64)
     vals2d = np.asarray(vals2d, dtype=np.int64)
     rows = vals2d.shape[0]
@@ -178,13 +158,8 @@ def _encode_chunk(ts2d: np.ndarray, vals2d: np.ndarray
     branch[(dod >= -255) & (dod <= 256)] = 2
     branch[(dod >= -63) & (dod <= 64)] = 1
     branch[dod == 0] = 0
-    ctrl_tab = np.array([1, 2, 3, 4, 4], dtype=np.int64)
-    pay_tab = np.array([0, 7, 9, 12, 64], dtype=np.int64)
-    lo_tab = np.array([0, -63, -255, -2047, 0], dtype=np.int64)
-    ctrl_val_tab = np.array([0b0, 0b10, 0b110, 0b1110, 0b1111], dtype=np.uint64)
-
-    ctrln = ctrl_tab[branch]
-    payn = pay_tab[branch]
+    ctrln = _CTRL_LEN[branch]
+    payn = _PAY_LEN[branch]
     val_n = 1 + np.where(nz, 12 + siglen, 0)
 
     # --- exact per-point bit offsets, direct scatter (no bit tensor) ---
@@ -218,9 +193,9 @@ def _encode_chunk(ts2d: np.ndarray, vals2d: np.ndarray
 
     # timestamps: ctrl+payload combined into one field (<= 16 bits for
     # branches 0-3; branch 4 = 4+64 bits, written as two fields)
-    enc_pay = np.where(branch < 4, (dod - lo_tab[branch]).astype(np.uint64),
+    enc_pay = np.where(branch < 4, (dod - _LO[branch]).astype(np.uint64),
                        dod.view(np.uint64))
-    ts_field = ((ctrl_val_tab[branch] << payn.astype(np.uint64))
+    ts_field = ((_CTRL_VAL[branch] << payn.astype(np.uint64))
                 | np.where(payn > 0, enc_pay, np.uint64(0)))
     b4 = branch == 4
     m = ~b4
@@ -245,97 +220,212 @@ def _encode_chunk(ts2d: np.ndarray, vals2d: np.ndarray
     return t0, v0, n, buf, byte_offsets
 
 
-def decode_batch(t0: np.ndarray, v0: np.ndarray, n: np.ndarray,
-                 payloads: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
-    """Decode equal-length blocks in lockstep, vectorized across blocks.
+#: at most 4 + 64 timestamp bits and 1 + 12 + 64 value bits per point
+_MAX_POINT_BITS = 145
+#: points decoded per chunk of rows: bounds the extract pass's
+#: temporaries (a few uint64 arrays of this length)
+_CHUNK_POINTS = 1 << 20
 
-    All blocks must share the same point count (the engine's blocks are
-    per-(series, day) on a fixed grid, so this is the common case; for
-    ragged inputs group by n first). Returns (ts2d, vals2d) int64.
+# Decode tables. The walk keeps its windows as int64, so an arithmetic
+# right shift of a window whose top (timestamp control) bit is set
+# gives a negative index, which ``take`` reads from the table's top
+# half: the same layout as the unsigned index.
+_x4 = np.arange(16)
+_TS_BRANCH = np.select([_x4 < 8, _x4 < 12, _x4 < 14, _x4 < 15], [0, 1, 2, 3], 4)
+# by the 4-bit timestamp control window: control bits, payload bits
+# and payload offset
+_TS_CTRL = _CTRL_LEN[_TS_BRANCH]
+_TS_PAY = _PAY_LEN[_TS_BRANCH]
+_TS_LO = _LO[_TS_BRANCH]
+# bit length of a value field by its 13-bit header window ('0' or
+# '1' + lz + len-1), and of a whole point by its 14-bit prefix
+# ts-ctrl|nz|lz|len-1 (0 = timestamp control bit set: general path)
+_h13 = np.arange(1 << 13, dtype=np.int64)
+_V_LEN = np.where(_h13 >> 12 == 1, 14 + (_h13 & 63), 1)
+_PT_LEN = np.concatenate([1 + _V_LEN, np.zeros(1 << 13, dtype=np.int64)])
+# by the value header: the xor is ``(field bits << 13) & _XOR_MASK >> lz``,
+# where the mask keeps the top len bits (none for a zero xor)
+_V_LZ = ((_h13 >> 6) & 63).astype(np.uint64)
+_XOR_MASK = np.where(_h13 >> 12 == 1,
+                     ~np.uint64(0) << (63 - (_h13 & 63)).astype(np.uint64),
+                     0).astype(np.uint64)
 
-    Reads are 64-bit WORD-WINDOW extracts: each variable-width field
-    costs two word gathers + shifts instead of one gather per bit
-    (~4x over the per-bit reader). Control/header fields are read
-    speculatively (4-bit ts control, 13-bit value header in one peek)
-    and the cursor advanced by the true field length; over-reads land
-    in the zero padding past each payload, which is harmless because
-    the cursor never moves past real bits."""
-    rows = len(payloads)
-    t = int(n[0])
-    assert (np.asarray(n) == t).all(), "decode_batch requires equal n"
-    ts2d = np.empty((rows, t), dtype=np.int64)
-    vals2d = np.empty((rows, t), dtype=np.int64)
-    ts2d[:, 0] = t0
-    vals2d[:, 0] = v0
-    if t == 1:
-        return ts2d, vals2d
 
-    maxbytes = max(len(p) for p in payloads)
-    nwords = (maxbytes + 7) // 8 + 2  # spare words for speculative reads
-    buf = np.zeros((rows, nwords * 8), dtype=np.uint8)
-    for i, p in enumerate(payloads):
-        if p:
-            buf[i, :len(p)] = np.frombuffer(p, dtype=np.uint8)
-    # big-endian words: stream bit b = word b>>6, bit 63-(b&63)
-    words = buf.view(">u8").astype(np.uint64).reshape(rows, nwords)
+def decode_batch_arrow(t0: np.ndarray, v0: np.ndarray, n: np.ndarray,
+                       payload: pa.Array
+                       ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode blocks of any point counts straight from an Arrow
+    ``BinaryArray`` (its offsets and data buffers, honouring a sliced
+    array's offset). Returns ``(ts, vals, bits)``: the points of every
+    block back to back in row order (row ``i`` owns
+    ``n[:i].sum() .. n[:i + 1].sum()``) as int64, and the bits each
+    block's points consumed — a well-formed block has
+    ``ceil(bits / 8) == len(payload[i])``.
 
-    ridx = np.arange(rows)
-    cur = np.zeros(rows, dtype=np.int64)
+    Two phases, each vectorized across blocks:
 
-    def peek(width: int) -> np.ndarray:
-        """Read ``width`` bits at each row's cursor WITHOUT advancing."""
-        w_idx = cur >> 6
-        off = (cur & 63).astype(np.uint64)
-        hi = words[ridx, w_idx]
-        lo = words[ridx, w_idx + 1]
-        win = np.where(off == 0, hi,
-                       (hi << off) | (lo >> (np.uint64(64) - off)))
-        return win >> np.uint64(64 - width)
+    1. **Walk.** Each step reads one 64-bit window at every row's
+       cursor, records where the point starts and advances the cursor
+       by the point's bit length. On a fixed grid (timestamp control
+       bit 0) that length is one table lookup on the 14-bit prefix
+       ``ts-ctrl|nz|lz|len-1``; rows whose control bit is set (the
+       first point, irregular timestamps) take the general path, which
+       also reads the timestamp branch. Rows are walked longest first,
+       so a step only touches the rows still inside their block.
+    2. **Extract.** Every dod and xor field is read at the recorded
+       starts in one pass; ``cumsum`` rebuilds the timestamps and
+       ``np.bitwise_xor.accumulate`` the values.
 
-    ctrl_len_tab = np.array([1, 2, 3, 4, 4], dtype=np.int64)
-    pay_len_tab = np.array([0, 7, 9, 12, 64], dtype=np.int64)
-    lo_tab_all = np.array([0, -63, -255, -2047, 0], dtype=np.int64)
+    :func:`decode_block` is the serial certificate for this decoder."""
+    n = np.asarray(n, dtype=np.int64)
+    t0 = np.asarray(t0, dtype=np.int64)
+    v0 = np.asarray(v0, dtype=np.int64)
+    rows = len(n)
+    out_off = np.zeros(rows + 1, dtype=np.int64)
+    np.cumsum(n, out=out_off[1:])
+    ts = np.empty(int(out_off[-1]), dtype=np.int64)
+    vals = np.empty_like(ts)
+    bits = np.zeros(rows, dtype=np.int64)
+    if rows == 0:
+        return ts, vals, bits
+    bufs = payload.buffers()
+    width = np.dtype(np.int64 if pa.types.is_large_binary(payload.type)
+                     else np.int32)
+    offs = np.frombuffer(bufs[1], dtype=width, count=rows + 1,
+                         offset=payload.offset * width.itemsize).astype(np.int64)
+    data = (np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None
+            else np.zeros(0, dtype=np.uint8))
+    # a point takes at least 2 bits: a longer block cannot be walked
+    bad = np.nonzero((n < 1) | (n - 1 > 4 * np.diff(offs)))[0]
+    if len(bad):
+        i = int(bad[0])
+        raise ValueError(f"block {i}: n={n[i]} points cannot come from "
+                         f"{offs[i + 1] - offs[i]} payload bytes")
+    lo = 0
+    while lo < rows:
+        hi = max(lo + 1, int(np.searchsorted(
+            out_off, out_off[lo] + _CHUNK_POINTS, side="right")) - 1)
+        nn = n[lo:hi]
+        start = (offs[lo:hi] - offs[lo]) * 8
+        # a corrupt block may walk past its end, by at most
+        # _MAX_POINT_BITS per point: zero words cover the furthest read
+        reach = int((start + _MAX_POINT_BITS * (nn - 1)).max())
+        words = np.zeros((reach >> 5) + 3, dtype=np.uint32)
+        words.view(np.uint8)[:offs[hi] - offs[lo]] = data[offs[lo]:offs[hi]]
+        u = words.byteswap().astype(np.uint64)   # big-endian 32-bit words
+        g = (u[:-1] << 32) | u[1:]              # 64 bits from each word
+        pos, end = _walk(g, start, nn)
+        bits[lo:hi] = end - start
+        dod, xor = _extract(g, u, pos)
+        o0, o1 = out_off[lo], out_off[hi]
+        _rebuild(ts[o0:o1], vals[o0:o1], t0[lo:hi], v0[lo:hi], nn, dod, xor)
+        lo = hi
+    return ts, vals, bits
 
-    delta = np.zeros(rows, dtype=np.int64)
-    for i in range(1, t):
-        # --- timestamp: speculative 4-bit control window ---
-        c4 = peek(4).astype(np.int64)
-        branch = np.where((c4 >> 3) & 1 == 0, 0,
-                          np.where((c4 >> 2) & 1 == 0, 1,
-                                   np.where((c4 >> 1) & 1 == 0, 2,
-                                            np.where(c4 & 1 == 0, 3, 4))))
-        pay_len = pay_len_tab[branch]
-        cur += ctrl_len_tab[branch]
-        dod = np.zeros(rows, dtype=np.int64)
-        m = pay_len > 0
-        if m.any():
-            mx = int(pay_len.max())
-            raw = peek(mx) >> (mx - pay_len).astype(np.uint64)
-            # branch 4 is a raw 64-bit two's-complement dod; the rest
-            # are offset-encoded
-            dod = np.where(m, np.where(branch == 4, raw.astype(np.int64),
-                                       raw.astype(np.int64) + lo_tab_all[branch]), 0)
-            cur += pay_len
-        delta = delta + dod
-        ts2d[:, i] = ts2d[:, i - 1] + delta
 
-        # --- value: speculative 13-bit header window ---
-        h13 = peek(13).astype(np.int64)
-        nz = ((h13 >> 12) & 1) == 1
-        lz = (h13 >> 6) & 63
-        sl = (h13 & 63) + 1
-        cur += np.where(nz, 13, 1)
-        xor = np.zeros(rows, dtype=np.uint64)
-        if nz.any():
-            mxs = int(sl[nz].max())
-            raw = peek(mxs)
-            sig = raw >> (mxs - np.where(nz, sl, 1)).astype(np.uint64)
-            cur += np.where(nz, sl, 0)
-            shift = np.where(nz, 64 - lz - sl, 0).astype(np.uint64)
-            xor = np.where(nz, sig << shift, np.uint64(0))
-        prev = np.ascontiguousarray(vals2d[:, i - 1]).view(np.uint64)
-        vals2d[:, i] = (prev ^ xor).view(np.int64)
-    return ts2d, vals2d
+def _walk(g: np.ndarray, start: np.ndarray, n: np.ndarray
+          ) -> tuple[np.ndarray, np.ndarray]:
+    """Point start bits (row-major, ``n - 1`` per row) and end cursors.
+    ``g[w]`` holds the 64 stream bits from bit ``32 * w``, so
+    ``g[c >> 5] << (c & 31)`` has at least 33 valid bits at cursor ``c``:
+    enough for the 14-bit prefix and for the general path's widest
+    control+header read (the 64-bit raw dod is skipped, not read)."""
+    gi = g.view(np.int64)
+    steps = n - 1
+    order = np.argsort(-steps, kind="stable")
+    desc = steps[order]
+    cur = start[order]
+    slot = (np.cumsum(steps) - steps)[order]   # first pos index per row
+    pos = np.empty(int(steps.sum()), dtype=np.int64)
+    end = np.empty(len(n), dtype=np.int64)
+    done, k = 0, len(n)
+    while k:
+        upto = int(desc[k - 1])   # the shortest of the k active rows ends here
+        if upto > done:
+            blk = np.empty((upto - done + 1, k), dtype=np.int64)
+            blk[0] = cur[:k]
+            for j in range(upto - done):
+                c = blk[j]
+                win = gi.take(c >> 5) << (c & 31)
+                ln = _PT_LEN.take(win >> 50)
+                if not ln.all():
+                    gen = np.flatnonzero(ln == 0)
+                    x = win[gen] >> 60
+                    head = _TS_CTRL.take(x) + _TS_PAY.take(x)
+                    v = c[gen] + head
+                    ln[gen] = head + _V_LEN.take((gi.take(v >> 5) << (v & 31)) >> 51)
+                np.add(c, ln, out=blk[j + 1])
+            pos[slot[:k] + np.arange(done, upto)[:, None]] = blk[:-1]
+            cur[:k] = blk[-1]
+            done = upto
+        k2 = int(np.searchsorted(-desc, -upto, side="left"))
+        end[order[k2:k]] = cur[k2:k]
+        k = k2
+    return pos, end
+
+
+def _window(g: np.ndarray, u: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """The exact 64 stream bits (uint64) from each bit position ``b``."""
+    w, s = b >> 5, (b & 31).view(np.uint64)
+    return (g.take(w) << s) | (u.take(w + 2) >> (32 - s))
+
+
+def _extract(g: np.ndarray, u: np.ndarray, pos: np.ndarray
+             ) -> tuple[np.ndarray, np.ndarray]:
+    """The dod (int64) and xor (uint64) of the points starting at
+    ``pos``, all read in one vectorized pass. A fixed-grid point's
+    value header and (up to 50) significant bits sit in the same
+    window as its timestamp bit; only general-path points and wider
+    fields take a second read."""
+    win = _window(g, u, pos)
+    dod = np.zeros(len(pos), dtype=np.int64)
+    vstart = pos + 1
+    vwin = win << 1                   # 63 valid bits from vstart
+    gen = np.flatnonzero(win >= 1 << 63)
+    if len(gen):
+        x = (win[gen] >> 60).view(np.int64)
+        p = pos[gen] + _TS_CTRL[x]
+        pay = _TS_PAY[x]
+        raw = _window(g, u, p) >> (64 - pay).view(np.uint64)
+        dod[gen] = raw.view(np.int64) + _TS_LO[x]
+        vstart[gen] = p + pay
+        vwin[gen] = _window(g, u, vstart[gen])
+    hdr = (vwin >> 51).view(np.int64)
+    xor = ((vwin << 13) & _XOR_MASK.take(hdr)) >> _V_LZ.take(hdr)
+    wide = np.flatnonzero(_V_LEN.take(hdr) > 63)   # over 50 significant bits
+    if len(wide):
+        h = hdr[wide]
+        xor[wide] = ((_window(g, u, vstart[wide] + 13) & _XOR_MASK[h])
+                     >> _V_LZ[h])
+    return dod, xor
+
+
+def _rebuild(ts: np.ndarray, vals: np.ndarray, t0: np.ndarray,
+             v0: np.ndarray, n: np.ndarray, dod: np.ndarray,
+             xor: np.ndarray) -> None:
+    """Fill one chunk's points from its rows' first points and the
+    per-point dod/xor fields: segmented cumsums and xor scans (a scan
+    over the whole chunk, then each row's value before it taken out)."""
+    first = np.cumsum(n) - n
+    rest = np.ones(len(ts), dtype=bool)
+    rest[first] = False
+
+    def restart(acc: np.ndarray, op) -> None:
+        before = np.zeros(len(n), dtype=acc.dtype)
+        before[1:] = acc[first[1:] - 1]
+        op(acc, np.repeat(before, n), out=acc)
+
+    vals[first] = v0
+    vals[rest] = xor.view(np.int64)
+    np.bitwise_xor.accumulate(vals, out=vals)
+    restart(vals, np.bitwise_xor)
+    ts[first] = 0
+    ts[rest] = dod
+    np.cumsum(ts, out=ts)            # per-point deltas
+    restart(ts, np.subtract)
+    ts[first] = t0
+    np.cumsum(ts, out=ts)
+    restart(ts, np.subtract)
 
 
 class _BitReader:
@@ -356,9 +446,12 @@ class _BitReader:
 
 def decode_block(t0: int, v0: int, n: int, payload: bytes
                  ) -> tuple[np.ndarray, np.ndarray]:
-    """Decode one block back to (ts, values). Exact inverse of
-    :func:`encode_block` (round-trip token-array equality is the
-    per-row invariant, BASELINE.json input_hint)."""
+    """CERTIFICATE decoder: decode one block back to (ts, values) with a
+    serial bit-by-bit reader. Exact inverse of :func:`encode_block`
+    (round-trip token-array equality is the per-row invariant,
+    BASELINE.json input_hint). Production decodes with
+    :func:`decode_batch_arrow`; this independent implementation exists
+    to check it (tests/test_codecs_property.py)."""
     ts = np.empty(n, dtype=np.int64)
     vals = np.empty(n, dtype=np.int64)
     ts[0] = t0

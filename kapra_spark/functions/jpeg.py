@@ -750,11 +750,11 @@ def _lockstep_eligible(meta: dict) -> bool:
 def _entropy_lockstep(metas: list[dict]) -> list[list]:
     """Vectorized entropy decode of MANY frames at once: one lane per
     restart segment, all lanes stepped in lockstep with NumPy (word-
-    window bit peeks + flat-LUT gathers, same technique as
-    gorilla.decode_batch). Per step every active lane decodes exactly
-    one Huffman symbol; divergent lanes are masked. Semantically
-    identical to :func:`_entropy_serial` (DC preds reset per segment,
-    EOB/ZRL/run handling, loud errors on invalid codes or overruns).
+    window bit peeks + flat-LUT gathers). Per step every active lane
+    decodes exactly one Huffman symbol; divergent lanes are masked.
+    Semantically identical to :func:`_entropy_serial` (DC preds reset
+    per segment, EOB/ZRL/run handling, loud errors on invalid codes or
+    overruns).
 
     Returns, per meta, the same per-component coefficient grids the
     serial decoder produces."""

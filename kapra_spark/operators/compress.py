@@ -14,11 +14,12 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions import gorilla
-from .rollup import DAY_POINTS, EPOCH_SECONDS, rows_matrix
+from .rollup import DAY_POINTS, EPOCH_SECONDS, rows_matrix, series_columns
 
 BLOCKS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -58,29 +59,6 @@ def _const_str(value: str, n: int) -> pa.Array:
         pa.array([value])).cast(pa.string())
 
 
-def _series_columns(rb: pa.RecordBatch):
-    """(doc_id, source, n_tok, flat values, offsets) of a tokens batch,
-    resolved by NAME (partitioned read-back reorders columns). Checks
-    the input contract ``len(tokens) == n_tok`` once per batch: a row
-    with ``n_tok > len`` would read its neighbour's values and one with
-    ``n_tok < len`` would silently lose its tail."""
-    names = rb.schema.names
-    c_doc = rb.column(names.index("doc_id"))
-    n_tok = rb.column(names.index("n_tok")).to_numpy()
-    col = rb.column(names.index("tokens"))
-    offsets = col.offsets.to_numpy()
-    lens = np.diff(offsets)
-    bad = np.nonzero(lens != n_tok)[0]
-    if len(bad):
-        i = int(bad[0])
-        raise ValueError(
-            f"tokens row doc_id={c_doc[i].as_py()!r} has len(tokens)="
-            f"{lens[i]} but n_tok={n_tok[i]} ({len(bad)} such rows in "
-            f"this batch)")
-    flat = col.values.to_numpy(zero_copy_only=False)
-    return c_doc, rb.column(names.index("source")), n_tok, flat, offsets
-
-
 def compress_tokens(tokens_df: DataFrame, tier: str = "1m") -> DataFrame:
     """tokens table -> Gorilla blocks, one per (doc_id, day). For the
     canonical 144-token (one day at 1-minute grain) series this is one
@@ -90,7 +68,7 @@ def compress_tokens(tokens_df: DataFrame, tier: str = "1m") -> DataFrame:
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            c_doc, c_src, n_tok, flat, offsets = _series_columns(rb)
+            c_doc, c_src, n_tok, flat, offsets = series_columns(rb)
             out_cols: dict[str, list] = {k: [] for k in
                                          ("take", "bucket_day", "t0", "v0", "n", "payload")}
             for nt in np.unique(n_tok):
@@ -185,7 +163,7 @@ def compress_and_cascade(tokens_df: DataFrame,
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            c_doc, c_src, n_tok, flat, offsets = _series_columns(rb)
+            c_doc, c_src, n_tok, flat, offsets = series_columns(rb)
             # an empty series (n_tok = 0) emits no rows
             for nt in np.unique(n_tok[n_tok > 0]):
                 idx = np.nonzero(n_tok == nt)[0]
@@ -253,40 +231,50 @@ _DECOMP_ARROW = pa.schema(list(TOKENS_ARROW) + [pa.field("t0", pa.int64())])
 def decompress_tokens(blocks_df: DataFrame) -> DataFrame:
     """Gorilla blocks -> tokens rows, one per day-block, carrying the
     block start timestamp ``t0`` (sort by it to reassemble multi-day
-    series). Columns are resolved by NAME: a partitioned read-back
-    moves partition columns to the end."""
+    series). Only the columns the decoder reads cross to Python, and
+    they are resolved by NAME (a partitioned read-back moves partition
+    columns to the end). A null payload, or one whose length disagrees
+    with the bits its ``n`` points consume, raises a ``ValueError``
+    naming the block's ``doc_id``."""
 
     def fn(batches):
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            col = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-            t0 = col["t0"].to_numpy(zero_copy_only=False)
-            v0 = col["v0"].to_numpy(zero_copy_only=False)
-            n = col["n"].to_numpy(zero_copy_only=False).astype(np.int64)
-            payloads = col["payload"].to_pylist()
-            toks_out = []
-            order = []
-            for nt in np.unique(n):
-                idx = np.nonzero(n == nt)[0]
-                _, vals2d = gorilla.decode_batch(
-                    t0[idx], v0[idx], n[idx], [payloads[i] for i in idx])
-                toks_out.append(vals2d.astype(np.int32))
-                order.append(idx)
-            order_all = np.concatenate(order)
-            inv = pa.array(order_all, type=pa.int64())
-            flat_lists = pa.array(
-                [row for block in toks_out for row in block],
-                type=pa.list_(pa.int32()))
+            col = dict(zip(rb.schema.names, rb.columns))
+            doc, payload = col["doc_id"], col["payload"]
+            n = col["n"].to_numpy(zero_copy_only=False)
+            _check_blocks(doc, col["t0"], payload.is_null().to_numpy(
+                zero_copy_only=False), "has a null payload")
+            _, vals, bits = gorilla.decode_batch_arrow(
+                col["t0"].to_numpy(zero_copy_only=False),
+                col["v0"].to_numpy(zero_copy_only=False), n, payload)
+            lens = pc.binary_length(payload).to_numpy(zero_copy_only=False)
+            _check_blocks(doc, col["t0"], (bits + 7) // 8 != lens,
+                          "has a payload whose length disagrees with its n")
+            offsets = np.zeros(len(n) + 1, dtype=np.int32)
+            np.cumsum(n, out=offsets[1:])
             yield pa.RecordBatch.from_arrays([
-                _as_array(col["doc_id"]).take(inv),
-                flat_lists,
-                pa.array(n[order_all].astype(np.int32), type=pa.int32()),
-                _as_array(col["source"]).take(inv),
-                pa.array(t0[order_all], type=pa.int64()),
+                _as_array(doc),
+                pa.ListArray.from_arrays(pa.array(offsets),
+                                         pa.array(vals.astype(np.int32))),
+                col["n"],
+                _as_array(col["source"]),
+                col["t0"],
             ], schema=_DECOMP_ARROW)
 
-    return blocks_df.mapInArrow(fn, DECOMP_SCHEMA)
+    return (blocks_df.select("doc_id", "source", "t0", "v0", "n", "payload")
+            .mapInArrow(fn, DECOMP_SCHEMA))
+
+
+def _check_blocks(doc: pa.Array, t0: pa.Array, bad: np.ndarray,
+                  what: str) -> None:
+    rows = np.nonzero(bad)[0]
+    if len(rows):
+        i = int(rows[0])
+        raise ValueError(
+            f"block doc_id={doc[i].as_py()!r} t0={t0[i].as_py()} {what} "
+            f"({len(rows)} such blocks in this batch)")
 
 
 def _as_array(col):

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -237,8 +238,6 @@ def _tier_from_tokens(tokens_df: DataFrame, tier: str) -> DataFrame:
     kernels as :func:`cascade_fast` (whose equality to the declarative
     plan and to the DuckDB oracle is pytest-pinned), emitting the
     long-form tier schema with ``bucket_s`` as epoch seconds."""
-    import pyarrow as pa
-
     mins = TIERS[tier]
     arrow_schema = pa.schema([
         ("source", pa.string()), ("doc_id", pa.string()),
@@ -251,16 +250,9 @@ def _tier_from_tokens(tokens_df: DataFrame, tier: str) -> DataFrame:
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            names = rb.schema.names
-            c_doc = rb.column(names.index("doc_id"))
-            c_src = rb.column(names.index("source"))
-            n_tok = rb.column(names.index("n_tok")).to_numpy()
-            col = rb.column(names.index("tokens"))
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            offsets = col.offsets.to_numpy()
-            flat = col.values.to_numpy(zero_copy_only=False)
-            for nt in np.unique(n_tok):
+            c_doc, c_src, n_tok, flat, offsets = series_columns(rb)
+            # an empty series (n_tok = 0) emits no rows
+            for nt in np.unique(n_tok[n_tok > 0]):
                 idx = np.nonzero(n_tok == nt)[0]
                 vals = rows_matrix(flat, offsets, idx, int(nt), dtype=None)
                 filled, fmask = _locf_2d(vals)
@@ -340,11 +332,34 @@ def rows_matrix(flat: np.ndarray, offsets: np.ndarray, idx: np.ndarray,
         base = int(starts[0])
         # copy=False: a true zero-copy VIEW of the Arrow buffer when
         # the dtype already matches — downstream consumers (_locf_2d,
-        # encode_batch) only read, never mutate
+        # encode_batch_arrow) only read, never mutate
         m = flat[base:base + len(starts) * nt].reshape(len(starts), nt)
     else:
         m = flat[starts[:, None] + np.arange(nt)[None, :]]
     return m if dtype is None else m.astype(dtype, copy=False)
+
+
+def series_columns(rb: pa.RecordBatch):
+    """(doc_id, source, n_tok, flat values, offsets) of a tokens batch,
+    resolved by NAME (partitioned read-back reorders columns). Checks
+    the input contract ``len(tokens) == n_tok`` once per batch: a row
+    with ``n_tok > len`` would read its neighbour's values and one with
+    ``n_tok < len`` would silently lose its tail."""
+    names = rb.schema.names
+    c_doc = rb.column(names.index("doc_id"))
+    n_tok = rb.column(names.index("n_tok")).to_numpy()
+    col = rb.column(names.index("tokens"))
+    offsets = col.offsets.to_numpy()
+    lens = np.diff(offsets)
+    bad = np.nonzero(lens != n_tok)[0]
+    if len(bad):
+        i = int(bad[0])
+        raise ValueError(
+            f"tokens row doc_id={c_doc[i].as_py()!r} has len(tokens)="
+            f"{lens[i]} but n_tok={n_tok[i]} ({len(bad)} such rows in "
+            f"this batch)")
+    flat = col.values.to_numpy(zero_copy_only=False)
+    return c_doc, rb.column(names.index("source")), n_tok, flat, offsets
 
 
 def _locf_2d(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -436,8 +451,6 @@ def cascade_fast(tokens_df: DataFrame,
     tier is computable locally. Output: union of tiers, tagged by
     ``tier``; bucket as epoch seconds. Integer-exact. String columns
     are gathered with Arrow ``take`` — no Python objects anywhere."""
-    import pyarrow as pa
-
     arrow_schema = pa.schema([
         ("tier", pa.string()), ("source", pa.string()), ("doc_id", pa.string()),
         ("bucket", pa.int64()), ("cnt", pa.int64()), ("sum", pa.int64()),
@@ -449,18 +462,9 @@ def cascade_fast(tokens_df: DataFrame,
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            # resolve columns by NAME (partitioned read-back or a
-            # caller's select can reorder the schema)
-            names = rb.schema.names
-            c_doc = rb.column(names.index("doc_id"))
-            c_src = rb.column(names.index("source"))
-            n_tok = rb.column(names.index("n_tok")).to_numpy()
-            col = rb.column(names.index("tokens"))
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            offsets = col.offsets.to_numpy()
-            flat = col.values.to_numpy(zero_copy_only=False)
-            for nt in np.unique(n_tok):
+            c_doc, c_src, n_tok, flat, offsets = series_columns(rb)
+            # an empty series (n_tok = 0) emits no rows
+            for nt in np.unique(n_tok[n_tok > 0]):
                 idx = np.nonzero(n_tok == nt)[0]
                 vals = rows_matrix(flat, offsets, idx, int(nt), dtype=None)
                 filled, fmask = _locf_2d(vals)

@@ -12,11 +12,11 @@ def test_kernel_roundtrip_token_walks():
     rng = np.random.default_rng(7)
     vals = np.maximum(np.cumsum(rng.integers(-3, 4, size=(100, 144)), axis=1) + 40, 0)
     ts = np.arange(144)[None, :].repeat(100, axis=0) * 60 + 1704067200
-    t0, v0, n, p = G.encode_batch(ts, vals)
-    dts, dvals = G.decode_batch(t0, v0, n, p)
-    assert np.array_equal(dts, ts)
-    assert np.array_equal(dvals, vals)
-    bits_pp = sum(len(x) for x in p) * 8 / vals.size
+    t0, v0, n, p = G.encode_batch_arrow(ts, vals)
+    dts, dvals, _ = G.decode_batch_arrow(t0, v0, n, p)
+    assert np.array_equal(dts.reshape(ts.shape), ts)
+    assert np.array_equal(dvals.reshape(vals.shape), vals)
+    bits_pp = sum(len(x) for x in p.to_pylist()) * 8 / vals.size
     assert bits_pp < 20  # >4.8x vs raw 96-bit (ts+value)
 
 
@@ -30,9 +30,9 @@ def test_kernel_roundtrip_adversarial():
         (np.array([[5]]), np.array([[42]])),  # single point
     ]
     for ts, vals in cases:
-        t0, v0, n, p = G.encode_batch(ts, vals)
+        t0, v0, n, p = G.encode_batch_arrow(ts, vals)
         for i in range(len(p)):
-            dts, dv = G.decode_block(int(t0[i]), int(v0[i]), int(n[i]), p[i])
+            dts, dv = G.decode_block(int(t0[i]), int(v0[i]), int(n[i]), p[i].as_py())
             assert np.array_equal(dts, ts[i])
             assert np.array_equal(dv, vals[i])
 
@@ -41,10 +41,11 @@ def test_single_and_batch_decoders_agree():
     rng = np.random.default_rng(9)
     vals = rng.integers(-1000, 1000, size=(30, 77))
     ts = np.cumsum(rng.integers(1, 100, size=(30, 77)), axis=1)
-    t0, v0, n, p = G.encode_batch(ts, vals)
-    bts, bvals = G.decode_batch(t0, v0, n, p)
+    t0, v0, n, p = G.encode_batch_arrow(ts, vals)
+    bts, bvals, _ = G.decode_batch_arrow(t0, v0, n, p)
+    bts, bvals = bts.reshape(ts.shape), bvals.reshape(vals.shape)
     for i in range(30):
-        sts, svals = G.decode_block(int(t0[i]), int(v0[i]), int(n[i]), p[i])
+        sts, svals = G.decode_block(int(t0[i]), int(v0[i]), int(n[i]), p[i].as_py())
         assert np.array_equal(sts, bts[i]) and np.array_equal(svals, bvals[i])
 
 
@@ -134,3 +135,33 @@ def test_compress_tokens_input_contract(spark):
                                 schema=datagen.TOKENS_SCHEMA).coalesce(1)
     with pytest.raises(Exception, match=r"ValueError: tokens row doc_id='a'"):
         compress_tokens(bad).collect()
+
+
+@pytest.mark.parametrize("corrupt", [None, "cut2", "cut4", "n150", "n100", "null"])
+def test_decompress_rejects_corrupt_blocks(spark, corrupt):
+    """A block whose payload is null, or whose length disagrees with the
+    bits its n points consume, raises instead of decoding to wrong
+    tokens: a payload cut short by 2 or 4 bytes, and a 144-point payload
+    read with n = 150 or n = 100, all used to decode silently."""
+    import datetime
+
+    from kapra_spark.operators.compress import BLOCKS_SCHEMA, decompress_tokens
+    from kapra_spark.operators.rollup import EPOCH_SECONDS
+
+    rng = np.random.default_rng(11)
+    ts = EPOCH_SECONDS + 60 * np.arange(144, dtype=np.int64)
+    series = [rng.integers(0, 256, size=144) for _ in range(2)]
+    (t0, v0, n, p), ok = [G.encode_block(ts, v) for v in series]
+    n, p = {None: (n, p), "cut2": (n, p[:-2]), "cut4": (n, p[:-4]),
+            "n150": (150, p), "n100": (100, p), "null": (n, None)}[corrupt]
+    day = datetime.date(2024, 1, 1)
+    blocks = spark.createDataFrame(
+        [(d, "sales", "1m", day, *blk) for d, blk in
+         (("bad", (t0, v0, n, p)), ("ok", ok))],
+        schema=BLOCKS_SCHEMA).coalesce(1)
+    if corrupt is None:
+        got = {r.doc_id: list(r.tokens) for r in decompress_tokens(blocks).collect()}
+        assert got == {"bad": list(series[0]), "ok": list(series[1])}
+        return
+    with pytest.raises(Exception, match=r"ValueError: block doc_id='bad'"):
+        decompress_tokens(blocks).collect()

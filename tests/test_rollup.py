@@ -197,3 +197,48 @@ def test_gapfill_interpolate_exact(spark):
     assert got[3] == (30.0, True)
     assert got[4] == (40.0, False)
     assert got[5] == (None, False)        # trailing gap stays NULL
+
+
+# ---------------------------------------------------------------------------
+# input contract: len(tokens) == n_tok, checked where the kernels read rows
+# ---------------------------------------------------------------------------
+
+def _rollup_rows(op: str, df):
+    """Every output row of ``cascade_fast`` or of all ``cascade`` tiers."""
+    if op == "cascade_fast":
+        return R.cascade_fast(df).collect()
+    return [r for tier in R.cascade(df).values() for r in tier.collect()]
+
+
+def _contract_tokens(spark, rows):
+    return spark.createDataFrame(rows, schema=datagen.TOKENS_SCHEMA).coalesce(1)
+
+
+@pytest.mark.parametrize("op", ["cascade_fast", "cascade"])
+def test_rollup_ntok_longer_than_tokens_raises(spark, op):
+    """n_tok > len(tokens) used to read the next row's values (row a got
+    a 1h sum of 106 from row b)."""
+    df = _contract_tokens(spark, [("a", [1, 2, 3], 4, "sales"),
+                                  ("b", [100, 200, 300, 400], 4, "sales")])
+    with pytest.raises(Exception, match=r"ValueError: tokens row doc_id='a'"):
+        _rollup_rows(op, df)
+
+
+@pytest.mark.parametrize("op", ["cascade_fast", "cascade"])
+def test_rollup_ntok_shorter_than_tokens_raises(spark, op):
+    """n_tok < len(tokens) used to drop the tail silently."""
+    df = _contract_tokens(spark, [("b", [100, 200, 300, 400], 4, "sales"),
+                                  ("c", [1, 2, 3, 4, 5], 3, "sales")])
+    with pytest.raises(Exception, match=r"ValueError: tokens row doc_id='c'"):
+        _rollup_rows(op, df)
+
+
+@pytest.mark.parametrize("op", ["cascade_fast", "cascade"])
+def test_rollup_empty_series_emits_no_rows(spark, op):
+    """n_tok = 0 used to crash the kernel; an empty series emits nothing
+    and its neighbour rolls up as on its own (3 minutes, 1 hour, 1 day)."""
+    df = _contract_tokens(spark, [("e", [], 0, "sales"), ("x", [5, 6, 7], 3, "sales")])
+    rows = _rollup_rows(op, df)
+    assert [r["doc_id"] for r in rows] == ["x"] * 5
+    assert sorted(r["sum"] for r in rows) == [5, 6, 7, 18, 18]
+    assert _rollup_rows(op, _contract_tokens(spark, [("e", [], 0, "sales")])) == []
